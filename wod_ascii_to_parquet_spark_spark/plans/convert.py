@@ -7,11 +7,12 @@ Reference lifecycle (``SparklerExecutor.java:48-69`` +
   per-file tasks (``DatasetTrain.java:51-86``).
 - **skip/resume**: output ``_SUCCESS`` exists → skip; stale ``_temporary``
   or ``overwrite`` → clean first (``DatasetYearTrain.java:89-94``).
-- **convert one file**: distributed parse → split ok/err →
-  geohash + geohash3 → ``repartition("geohash3")`` →
+- **convert one file**: ONE distributed parse → geohash + geohash3 →
+  ``repartition("geohash3")`` → error rows observed and filtered out →
   ``sortWithinPartitions("geohash")`` → ``write.partitionBy("geohash3")``
-  (``DatasetYearTrain.java:128-139``) + error store append
-  (``TransformationErrorHandler.java:42-52``).
+  (``DatasetYearTrain.java:128-139``). The error store
+  (``TransformationErrorHandler.java:42-52``) is written after the commit
+  from the error rows the write stage observed — no second decode.
 - The reference's dead global ``orderBy(asc("geohash"))``
   (``DatasetYearTrain.java:130``) — a full range shuffle destroyed by the
   following repartition — is intentionally omitted.
@@ -45,13 +46,15 @@ import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.geohash import geohash_col
 from ..registry import cached_frames
+from ..schemas import CAST_ERROR
 from ..sources.filesystem import FsClient
-from ..sources.wod_ascii import errors, ok_casts, wod_scan
+from ..sources.wod_ascii import errors, wod_scan
 from .geo_metadata import SIDECAR_NAME, attach_geo_footer, geo_sidecar_bytes
 
 
@@ -150,26 +153,40 @@ def _has_stale_temp(fs: FsClient, path: str) -> bool:
     return fs.is_dir(path) and fs.exists(_join(path, "_temporary"))
 
 
-def _write_error_channel(
-    spark: SparkSession,
-    fs: FsClient,
-    task: FileTask,
-    scatter: bool | None = None,
-    known_has_errors: bool = False,
-) -> None:
-    """Materialize the per-file error store (one re-decode) if the file has
-    any malformed records; idempotent (overwrite). Called on the rare
-    errors-present path of :func:`convert_file` (which already KNOWS the
-    count from the in-flight Observation — ``known_has_errors=True``
-    skips the existence probe, saving a decode) and on sidecar heals,
-    where nothing is known and the probe runs."""
-    if scatter is None:
-        scatter = fs.size(task.input_path) >= _SCATTER_MIN_BYTES
-    errs = errors(
-        wod_scan(spark, task.input_path, dataset=task.dataset, scatter=scatter)
+def _scan(spark: SparkSession, fs: FsClient, task: FileTask) -> DataFrame:
+    """The file's tagged-union parse. Scatter-parse (gunzip+frame in the
+    file task, field-decode fanned out across all cores) for files big
+    enough that decode width matters; tiny files stay single-stage — their
+    record exchange would cost more than it balances. No cache: each
+    caller consumes the parse once."""
+    scatter = fs.size(task.input_path) >= _SCATTER_MIN_BYTES
+    return wod_scan(spark, task.input_path, dataset=task.dataset, scatter=scatter)
+
+
+def _write_error_channel(spark: SparkSession, task: FileTask, errs: list) -> None:
+    """Materialize the per-file error store from already-collected
+    ``(dataset, castNumber, error)`` rows, if there are any; idempotent
+    (overwrite). The rows become a ``pyarrow.Table``, so the write plans a
+    local scan and starts no Python worker (a list of ``Row`` objects
+    would go through a Python RDD and start one per task)."""
+    if not errs:
+        return
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # Every column nullable, as the ``err.*`` projection of the parsed
+    # union has always written them: the file schema stays the same.
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in CAST_ERROR])
+    table = pa.Table.from_pylist(
+        [r.asDict() for r in errs], schema=to_arrow_schema(schema)
     )
-    if known_has_errors or errs.limit(1).count() > 0:
-        errs.coalesce(1).write.mode("overwrite").parquet(task.error_path)
+    (
+        spark.createDataFrame(table, schema)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(task.error_path)
+    )
 
 
 def convert_file(
@@ -201,50 +218,27 @@ def convert_file(
         # GeoParquet footer attach, so it is the publish-completion
         # marker: a crash after the main commit but before publish
         # completed heals here (every step is idempotent — the error
-        # channel is rebuilt from one re-decode, the footer attach and
-        # sidecar rewrite are restartable) instead of forcing a rebuild.
+        # channel is rebuilt from one re-decode whose error rows are
+        # collected, the footer attach and sidecar rewrite are
+        # restartable) instead of forcing a rebuild.
         sidecar = _join(out, SIDECAR_NAME)
         if not fs.exists(sidecar):
-            _write_error_channel(spark, fs, task)
+            _write_error_channel(spark, task, errors(_scan(spark, fs, task)).collect())
             enc = _footer_encoding(geometry_encoding)
             attach_geo_footer(fs, out, spark=spark, encoding=enc)
             fs.write_bytes(sidecar, geo_sidecar_bytes(enc))
         return "skipped"
 
-    # Scatter-parse (gunzip+frame in the file task, field-decode fanned out
-    # across all cores) for files big enough that decode width matters;
-    # tiny files stay single-stage — their record exchange would cost more
-    # than it balances. No cache: the scattered parse is cheap enough that
-    # recomputing it for the rare error-channel job beats paying the
-    # in-memory columnar encode of deeply nested cast structs.
-    scatter = fs.size(task.input_path) >= _SCATTER_MIN_BYTES
-    parsed = wod_scan(spark, task.input_path, dataset=task.dataset, scatter=scatter)
-    # Error DETECTION is free: an Observation above the ok-filter counts
-    # error rows while the main write's single decode streams by (the
-    # filter is not pushed through CollectMetrics), so the happy path
-    # decodes each file ONCE — the previous always-on error-check job was
-    # a second full decode per file, the dominant duplicated cost at real
-    # file sizes. Only files that actually contain errors pay a second
-    # decode to materialize the channel (overwrite, not append — the
-    # reference's TransformationErrorHandler.java:42-52 appends
-    # incrementally; one overwrite per file is equivalent and retry-safe).
-    # Crash contract: the error write now lands AFTER the main commit, so
-    # _SUCCESS alone no longer implies the error channel exists — the
-    # SIDECAR is the completion marker, and the skip path above rebuilds
-    # the channel whenever it heals a missing sidecar.
-    from pyspark.sql import Observation
-
-    obs = Observation("wod_convert_errors")
-    parsed = parsed.observe(
-        obs,
-        F.sum(F.when(F.col("err").isNotNull(), 1).otherwise(0)).alias("n_err"),
-    )
+    parsed = _scan(spark, fs, task)
     # castTimestamp: assembled from Y/M/D + fractional-hour time
     # (SURVEY §1.2); try_* variants — invalid header dates yield null,
-    # not a job failure, under ANSI mode.
+    # not a job failure, under ANSI mode. The columns are built on the
+    # whole tagged union (error rows carry nulls through them, which
+    # every expression below propagates without failing) so that the
+    # error rows can be split off in the write stage, below.
     seconds = (F.col("time") * 3600).cast("int")
     casts = (
-        ok_casts(parsed)
+        parsed.select("err", "ok.*")
         .withColumn(
             "castTimestamp",
             F.try_add(
@@ -301,6 +295,31 @@ def convert_file(
         staged = casts.hint("rebalance", F.col("geohash3"))
     else:
         staged = casts.repartition(n_write_tasks, F.col("geohash3"))
+    # Error rows come out of the write job itself, so each file is decoded
+    # ONCE. The Observation sits ABOVE the writer exchange and below the
+    # err-filter (Catalyst never pushes a filter through CollectMetrics),
+    # so it sees every row of the decode and runs in the write's RESULT
+    # stage: Spark applies a result task's accumulator update once per
+    # partition, so a re-run shuffle-map stage or a retried task neither
+    # loses nor duplicates an error row (placed below the exchange, a
+    # map-stage re-run would count its rows twice). Driver memory: the
+    # collected list holds one short (dataset, castNumber, error) struct
+    # per MALFORMED cast (WodFormatError messages are tens of bytes),
+    # never a cast body. Overwrite, not append — the reference's
+    # TransformationErrorHandler.java:42-52 appends incrementally; one
+    # overwrite per file is equivalent and retry-safe.
+    # Crash contract: the error write lands AFTER the main commit, so
+    # _SUCCESS alone does not imply the error channel exists — the
+    # SIDECAR is the completion marker, and the skip path above rebuilds
+    # the channel whenever it heals a missing sidecar.
+    from pyspark.sql import Observation
+
+    obs = Observation("wod_convert_errors")
+    staged = (
+        staged.observe(obs, F.collect_list("err").alias("errs"))
+        .filter(F.col("err").isNull())
+        .drop("err")
+    )
     (
         # Sort by (geohash3, geohash): the partitioned writer requires
         # ordering by the partition column and would insert its own
@@ -317,13 +336,7 @@ def convert_file(
         .partitionBy("geohash3")
         .parquet(out)
     )
-    if int(obs.get["n_err"] or 0) > 0:
-        # Rare path: re-decode to materialize the error channel (a fresh
-        # scan — the observed frame's metric is already consumed; the
-        # Observation already proved errors exist, so no probe).
-        _write_error_channel(
-            spark, fs, task, scatter=scatter, known_has_errors=True
-        )
+    _write_error_channel(spark, task, obs.get["errs"])
     # Real GeoParquet: attach the `geo` footer key to every data file
     # (the Sedona-free mirror of the reference's geoparquet.version/crs
     # writer options, DatasetYearTrain.java:132-134), THEN the sidecar —

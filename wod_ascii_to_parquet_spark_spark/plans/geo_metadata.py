@@ -114,6 +114,11 @@ def geo_footer_dict(encoding: str = "point") -> dict:
     }
 
 
+#: Local outputs with fewer data files than this are footer-stamped by a
+#: driver thread pool; larger ones by a Spark job (see attach_geo_footer).
+DRIVER_STAMP_MAX_FILES = 128
+
+
 def attach_geo_footer(
     fs, out_dir: str, max_workers: int = 16, spark=None, encoding: str = "point"
 ) -> int:
@@ -141,10 +146,18 @@ def attach_geo_footer(
     the last valid footer boundary (the original file is always one) before
     re-appending — see :func:`_recover_torn_tail`.
 
-    Scale shape: embarrassingly parallel per FILE. With a live session the
-    listing becomes an RDD and each Python WORKER PROCESS stamps its slice
-    directly on OS paths (no py4j, no driver GIL) — the 100 TB shape
-    verbatim; without one, a driver thread pool.
+    Scale shape: embarrassingly parallel per FILE. A local output with
+    fewer than :data:`DRIVER_STAMP_MAX_FILES` (128) files — or any local
+    output without a live session — is stamped by a driver thread pool.
+    Larger local outputs become a Spark job: the listing becomes an RDD
+    and each Python WORKER PROCESS stamps its slice directly on OS paths
+    (no py4j, no driver GIL) — the 100 TB shape verbatim. The split is by
+    cost: measured on a 4-core host with ~70 KB data files, the driver
+    pool stamps a file in about 1.6 ms, while the job costs about 0.28 s
+    to start (every Python task pays for worker set-up before any user
+    code runs) plus 0.65 ms per file, so the two cross near 300 files.
+    One convert file-job writes 12–20 files at benchmark scale; a large
+    yearly file writes 1,652, and keeps the job.
 
     Remote schemes (no append on object stores): each object is rebuilt
     IN MEMORY as ``old bytes + superseding footer`` (same O(footer) CPU as
@@ -157,10 +170,14 @@ def attach_geo_footer(
     from the worker environment, or a viewfs mount map shipped as plain
     data), so the driver does ONE listing RPC total, never per-file byte
     traffic — validated against the viewfs mock store in
-    ``tests/test_mock_remote_store.py``. Without a session, or for a
-    scheme no executor-side client can reach, a driver thread pool over
-    the FsClient byte API is the fallback (3 gateway-serialized py4j
-    calls per file — fine for test-scale layouts, not for 100 TB)."""
+    ``tests/test_mock_remote_store.py``. Remote schemes keep the job at
+    any file count: each remote stamp is an object GET + PUT + rename
+    round-trip, not a ~1.6 ms local append, so the driver pool's per-file
+    cost — and the crossover — is set by store latency, not by the job's
+    start-up. Without a session, or for a scheme no executor-side client
+    can reach, a driver thread pool over the FsClient byte API is the
+    fallback (3 gateway-serialized py4j calls per file — fine for
+    test-scale layouts, not for 100 TB)."""
     from concurrent.futures import ThreadPoolExecutor
 
     geo = json.dumps(geo_footer_dict(encoding)).encode()
@@ -175,7 +192,7 @@ def attach_geo_footer(
             for f in files
             if f.endswith(".parquet")
         )
-        if spark is not None and paths:
+        if spark is not None and len(paths) >= DRIVER_STAMP_MAX_FILES:
             geo_bytes = geo
 
             def _stamp_slice(it):

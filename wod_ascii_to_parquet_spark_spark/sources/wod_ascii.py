@@ -170,9 +170,9 @@ def wod_scan(
     Executor-side the decode emits Arrow RecordBatches directly
     (``mapInArrow``): building the nested arrays in pyarrow skips the
     pickle → JVM row-verification path entirely (~2× faster end-to-end
-    than the RDD formulation for the XBT fixture). Batches are capped at
-    ``_ARROW_BATCH_ROWS`` casts so multi-GB files stream with bounded
-    memory. Consumers split the channels with ``ok_casts`` / ``errors``.
+    than an RDD ``flatMap`` of tuples for the XBT fixture). Batches are
+    capped at ``_ARROW_BATCH_ROWS`` casts so multi-GB files stream with
+    bounded memory. Consumers split the channels with ``ok_casts`` / ``errors``.
 
     ``scatter=True`` (default) splits the work into two stages: the
     per-file task only gunzips and FRAMES cast records (the cheap part —
@@ -337,20 +337,6 @@ def wod_scan(
     return framed.repartition(
         spark.sparkContext.defaultParallelism
     ).mapInArrow(decode_records, PARSED)
-
-
-def wod_scan_rdd(
-    spark: SparkSession, paths: list[str] | str, dataset: str | None = None
-) -> DataFrame:
-    """RDD-flatMap formulation of the same source (kept for comparison and
-    as a fallback where Arrow is unavailable)."""
-    files = spark.read.format("binaryFile").load(paths)
-    rdd = files.select("path", "content").rdd.flatMap(
-        lambda row: parse_file_content(row.path, bytes(row.content), dataset)
-    )
-    # verifySchema=False: the parser emits schema-exact tuples; per-row
-    # verification of deeply nested rows costs more than the parse itself.
-    return spark.createDataFrame(rdd, PARSED, verifySchema=False)
 
 
 def ok_casts(parsed: DataFrame) -> DataFrame:
